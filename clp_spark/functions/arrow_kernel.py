@@ -1,12 +1,14 @@
 """mapInArrow CLP encode: zero per-row Python anywhere.
 
-The pandas-UDF path pays per-row Arrow↔Python conversion for the list/string
-output columns (~10× the kernel cost). This path works on pyarrow
-RecordBatches directly: tokens arrive as a ListArray whose values/offsets are
-numpy views, the numpy state-machine kernel (encode_kernel_np.encode_core)
-produces raw columnar buffers, and the output ListArray/StringArray columns
-are built from those buffers in O(1) — no Python object per row in either
-direction. This is the hot path the 10^12-row pipeline runs on.
+The one encode path of the engine. It works on pyarrow RecordBatches
+directly: messages arrive as a string or large_string array, or tokens as a
+ListArray, whose values/offsets are numpy views; the numpy state-machine
+kernel (encode_kernel_np.encode_core) produces raw columnar buffers, and the
+output ListArray/StringArray columns are built from those buffers in O(1) —
+no Python object per row in either direction. A per-row converter (a pandas
+UDF) would pay Arrow↔Python conversion for the list/string output columns,
+about 10× the kernel cost. This is the hot path the 10^12-row pipeline runs
+on.
 """
 
 from __future__ import annotations
@@ -16,7 +18,11 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from clp_spark.functions.encode_kernel_np import _ranges, encode_core
+from clp_spark.functions.encode_kernel_np import (
+    encode_core,
+    encode_spans,
+    string_buffers,
+)
 
 ENCODED_ARROW_SCHEMA_SUFFIX = (
     "logtype string, placeholders array<int>, encoded_vars array<long>, "
@@ -86,12 +92,9 @@ def tokens_to_buffer(
     n = len(offsets) - 1
     t = len(flat_tok)
     sep_id = len(vocab_pieces) - 1
-    if n == 0 or t == 0:
-        return (
-            np.zeros(1, dtype=np.uint8),
-            np.zeros(n, dtype=np.int64),
-            np.zeros(n, dtype=np.int64),
-        )
+    if n == 0 or t == 0:  # empty messages: nothing but the separators
+        pos = np.arange(n, dtype=np.int64)
+        return np.zeros(max(n - 1, 0), dtype=np.uint8), pos, pos
 
     tok_counts = np.diff(offsets)
     row_of_tok = np.repeat(np.arange(n, dtype=np.int32), tok_counts)
@@ -99,21 +102,28 @@ def tokens_to_buffer(
     new_flat = np.full(t + max(n - 1, 0), sep_id, dtype=np.int32)
     new_flat[np.arange(t, dtype=np.int64) + row_of_tok] = flat_tok
     pieces = pa.compute.take(vocab_pieces, pa.array(new_flat, type=pa.int32()))
-    piece_offs = np.frombuffer(pieces.buffers()[1], dtype=np.int32)[
-        pieces.offset : pieces.offset + len(pieces) + 1
-    ].astype(np.int64)
-    total = int(piece_offs[-1] - piece_offs[0])
-    buf = np.frombuffer(pieces.buffers()[2], dtype=np.uint8)[
-        piece_offs[0] : piece_offs[-1]
-    ]
-    if total == 0:
-        buf = np.zeros(1, dtype=np.uint8)
+    buf, piece_offs = string_buffers(pieces)
     # message i spans new-token indices [offsets[i]+i, offsets[i+1]+i)
     row_ix = np.arange(n, dtype=np.int64)
-    base = piece_offs[0]
-    msg_start = piece_offs[np.minimum(offsets[:-1] + row_ix, t + max(n - 1, 0))] - base
-    msg_end = piece_offs[offsets[1:] + row_ix] - base
+    msg_start = piece_offs[np.minimum(offsets[:-1] + row_ix, t + max(n - 1, 0))]
+    msg_end = piece_offs[offsets[1:] + row_ix]
     return buf, msg_start, msg_end
+
+
+def encode_arrays(messages: pa.Array) -> dict[str, pa.Array]:
+    """Message column (string or large_string) → encoded Arrow columns: the
+    per-batch body of make_encode_arrow. A null message encodes as the
+    empty message."""
+    data, offs = string_buffers(messages)
+    lens = np.diff(offs)
+    if messages.null_count:
+        lens[messages.is_null().to_numpy(zero_copy_only=False)] = 0
+    return encoded_arrays_from_core(encode_spans(data, offs[:-1], lens))
+
+
+def _with_encoded(batch: pa.RecordBatch, passthrough: list[str], cols: dict):
+    arrays = [batch.column(c) for c in passthrough] + list(cols.values())
+    return pa.RecordBatch.from_arrays(arrays, passthrough + list(cols.keys()))
 
 
 def make_detok_encode_arrow(
@@ -125,13 +135,8 @@ def make_detok_encode_arrow(
 
     def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            tokens = batch.column(tokens_col)
-            buf, msg_start, msg_end = tokens_to_buffer(tokens, vocab_pieces)
-            raw = encode_core(buf, msg_start, msg_end)
-            cols = encoded_arrays_from_core(raw)
-            arrays = [batch.column(c) for c in passthrough] + list(cols.values())
-            names = passthrough + list(cols.keys())
-            yield pa.RecordBatch.from_arrays(arrays, names)
+            raw = encode_core(*tokens_to_buffer(batch.column(tokens_col), vocab_pieces))
+            yield _with_encoded(batch, passthrough, encoded_arrays_from_core(raw))
 
     return _fn
 
@@ -141,32 +146,17 @@ def make_encode_arrow(passthrough: list[str], message_col: str = "message"):
 
     def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            col = batch.column(message_col)
-            data = col.buffers()[2]
-            offs = np.frombuffer(col.buffers()[1], dtype=np.int32)[
-                col.offset : col.offset + len(col) + 1
-            ]
-            full = np.frombuffer(data, dtype=np.uint8)
-            lo = int(offs[0])
-            # build a separated buffer (tokens must not span messages):
-            # copy each message followed by one 0x00 separator
-            lens = np.diff(offs).astype(np.int64)
-            n = len(lens)
-            total = int(lens.sum()) + max(n - 1, 0)
-            buf = np.zeros(max(total, 1), dtype=np.uint8)
-            msg_start = np.zeros(n, dtype=np.int64)
-            if n > 1:
-                msg_start[1:] = np.cumsum(lens + 1)[:-1]
-            src = np.repeat(offs[:-1].astype(np.int64), lens) + _ranges(lens)
-            dst = np.repeat(msg_start, lens) + _ranges(lens)
-            buf[dst] = full[src]
-            msg_end = msg_start + lens
-            raw = encode_core(buf, msg_start, msg_end)
-            cols = encoded_arrays_from_core(raw)
-            arrays = [batch.column(c) for c in passthrough] + list(cols.values())
-            yield pa.RecordBatch.from_arrays(arrays, passthrough + list(cols.keys()))
+            cols = encode_arrays(batch.column(message_col))
+            yield _with_encoded(batch, passthrough, cols)
 
     return _fn
+
+
+def passthrough_schema(df, passthrough: list[str], *tail: str) -> str:
+    """DDL of a mapInArrow output: the passthrough columns with their types
+    in ``df``, then the ``tail`` column specs."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    return ", ".join([f"{c} {types[c]}" for c in passthrough] + list(tail))
 
 
 def detok_encode_df(df, vocab_text: list[str], passthrough: list[str],
@@ -177,20 +167,12 @@ def detok_encode_df(df, vocab_text: list[str], passthrough: list[str],
     exchange — unused columns would otherwise pay row→Arrow conversion.
     """
     df = df.select(*passthrough, tokens_col)
-    schema = ", ".join(
-        f"{c} {dict(zip(df.columns, [f.dataType.simpleString() for f in df.schema.fields]))[c]}"
-        for c in passthrough
-    )
-    out_schema = schema + ", " + ENCODED_ARROW_SCHEMA_SUFFIX
     fn = make_detok_encode_arrow(vocab_text, passthrough, tokens_col)
-    return df.mapInArrow(fn, out_schema)
+    schema = passthrough_schema(df, passthrough, ENCODED_ARROW_SCHEMA_SUFFIX)
+    return df.mapInArrow(fn, schema)
 
 
 def encode_df(df, passthrough: list[str], message_col: str = "message"):
-    schema = ", ".join(
-        f"{c} {dict(zip(df.columns, [f.dataType.simpleString() for f in df.schema.fields]))[c]}"
-        for c in passthrough
-    )
-    out_schema = schema + ", " + ENCODED_ARROW_SCHEMA_SUFFIX
     fn = make_encode_arrow(passthrough, message_col)
-    return df.mapInArrow(fn, out_schema)
+    schema = passthrough_schema(df, passthrough, ENCODED_ARROW_SCHEMA_SUFFIX)
+    return df.mapInArrow(fn, schema)

@@ -25,7 +25,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from clp_spark.functions.encode_kernel_np import _ranges
+from clp_spark.functions.encode_kernel_np import _ranges, string_buffers
 
 INT_PH = 0x11
 DICT_PH = 0x12
@@ -153,17 +153,6 @@ def decode_core(
     return out[:total], out_offsets
 
 
-def _string_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(data, offsets) of a (Large)StringArray, offsets normalized to 0-base
-    over the slice, data trimmed to the slice's span."""
-    odt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
-    offs = np.frombuffer(arr.buffers()[1], dtype=odt)[
-        arr.offset : arr.offset + len(arr) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offs[0] : offs[-1]]
-    return data, offs - offs[0]
-
-
 def _list_flat(arr: pa.Array) -> tuple[pa.Array, int, int]:
     """(child, lo, hi): the slice of a ListArray's child this array covers."""
     odt = np.int64 if pa.types.is_large_list(arr.type) else np.int32
@@ -185,7 +174,7 @@ def decode_arrays(
     if isinstance(dict_vars, pa.ChunkedArray):
         dict_vars = dict_vars.combine_chunks()
 
-    buf, lt_offsets = _string_buffers(logtype)
+    buf, lt_offsets = string_buffers(logtype)
 
     ev_child, elo, ehi = _list_flat(encoded_vars)
     nd_values = np.asarray(ev_child.to_numpy(zero_copy_only=False), dtype=np.int64)[
@@ -193,12 +182,7 @@ def decode_arrays(
     ]
 
     dv_child, dlo, dhi = _list_flat(dict_vars)
-    sdt = np.int64 if pa.types.is_large_string(dv_child.type) else np.int32
-    all_seg_offs = np.frombuffer(dv_child.buffers()[1], dtype=sdt)
-    d_seg_offsets = all_seg_offs[
-        dv_child.offset + dlo : dv_child.offset + dhi + 1
-    ].astype(np.int64)
-    d_data = np.frombuffer(dv_child.buffers()[2], dtype=np.uint8)
+    d_data, d_seg_offsets = string_buffers(dv_child.slice(dlo, dhi - dlo))
 
     out_data, out_offsets = decode_core(buf, lt_offsets, nd_values, d_data, d_seg_offsets)
     return pa.StringArray.from_buffers(

@@ -1,22 +1,22 @@
 """Fully-vectorized CLP encode kernel: a numpy character-class state machine.
 
-Same semantics as clp_spark.oracle.encoder (reference rules
-/root/reference/components/core/src/clp/ir/parsing.cpp:20-88,
+Same semantics as clp_spark.oracle.encoder (reference rules:
+components/core/src/clp/ir/parsing.cpp:20-88,
 EncodedVariableInterpreter.cpp:25-143) but with *no regex and no per-row
 scanning*: the whole Arrow batch is concatenated into one uint8 buffer and
 every step — tokenization, variable classification, int/float parsing and
 bit-packing, escaping, logtype assembly — is numpy array arithmetic over that
-buffer. Per-row Python is limited to final string slicing.
+buffer. The output is raw columnar buffers that become Arrow arrays directly
+(arrow_kernel.encoded_arrays_from_core); no Python object is made per row.
 
-This is the hot path of the 10^12-row pipeline; the regex kernel
-(encode_kernel.py) is kept as an independent implementation for differential
-testing.
+This is the one encode implementation of the engine; the per-row oracle
+(clp_spark.oracle.encoder) is its differential-test counterpart.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 INT_PH = 0x11
 DICT_PH = 0x12
@@ -72,87 +72,20 @@ def _ranges(lengths: np.ndarray) -> np.ndarray:
     return out
 
 
-def _empty_result(n: int) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "logtype": [""] * n,
-            "placeholders": [[]] * n,
-            "encoded_vars": [[]] * n,
-            "dict_vars": [[]] * n,
-        }
-    )
-
-
-def encode_batch_np(messages: pd.Series) -> pd.DataFrame:
-    msgs = messages.fillna("").astype(str).tolist()
-    n = len(msgs)
-    if n == 0:
-        return _empty_result(0)
-
-    msg_bytes = [m.encode("utf-8") for m in msgs]
-    lens = np.fromiter((len(b) for b in msg_bytes), dtype=np.int64, count=n)
-    # join with a 0x00 separator (a delimiter) so tokens never span messages
-    buf = np.frombuffer(b"\x00".join(msg_bytes), dtype=np.uint8)
-    if buf.size == 0:
-        return _empty_result(n)
-    msg_start = np.cumsum(lens + 1) - (lens + 1)  # start of each message
-    msg_end = msg_start + lens
-    return encode_from_buffer(buf, msg_start, msg_end)
-
-
-def detok_encode_batch(
-    token_lists: pd.Series, vocab_buf: np.ndarray, piece_start: np.ndarray,
-    piece_len: np.ndarray,
-) -> pd.DataFrame:
-    """Fused detokenize+encode: token-id arrays → encoded columns with *no*
-    intermediate Python message strings. message = ''.join(vocab[t]) is built
-    as one byte-gather over a flattened vocab buffer, then encoded in place.
-
-    vocab_buf/piece_start/piece_len come from build_vocab_buffer().
-    """
-    n = len(token_lists)
-    if n == 0:
-        return _empty_result(0)
-    tok_counts = np.fromiter((len(t) for t in token_lists), dtype=np.int64, count=n)
-    if tok_counts.sum() == 0:
-        return _empty_result(n)
-    flat_tok = np.concatenate([np.asarray(t, dtype=np.int32) for t in token_lists])
-    plens = piece_len[flat_tok]
-    # bytes per message (sum of piece lengths per row)
-    row_of_tok = np.repeat(np.arange(n, dtype=np.int32), tok_counts)
-    msg_len = np.bincount(row_of_tok, weights=plens, minlength=n).astype(np.int64)
-    # output offset of each token's bytes, with a 1-byte separator per message
-    tok_off = (np.cumsum(plens, dtype=np.int64) - plens).astype(np.int32)
-    tok_off += row_of_tok  # shift by #separators before this row
-    total = int(plens.sum()) + (n - 1 if n > 0 else 0)
-    buf = np.zeros(max(total, 1), dtype=np.uint8)  # 0x00 separators by default
-    char_src = np.repeat(piece_start[flat_tok], plens) + _ranges(plens)
-    # dst differs from src by a per-token shift — one repeat instead of two
-    char_dst = char_src + np.repeat(tok_off - piece_start[flat_tok], plens)
-    buf[char_dst] = vocab_buf[char_src]
-    if total == 0:
-        return _empty_result(n)
-    buf = buf[:total]
-    msg_start = np.zeros(n, dtype=np.int64)
-    msg_start[1:] = np.cumsum(msg_len + 1)[:-1]
-    msg_end = msg_start + msg_len
-    return encode_from_buffer(buf, msg_start, msg_end)
-
-
-def build_vocab_buffer(vocab_text: list[str]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(vocab_buf, piece_start, piece_len) — flattened UTF-8 vocab for the
-    fused kernel; computed once per executor."""
-    pieces = [t.encode("utf-8") for t in vocab_text]
-    piece_len = np.fromiter((len(p) for p in pieces), dtype=np.int32, count=len(pieces))
-    vocab_buf = np.frombuffer(b"".join(pieces), dtype=np.uint8)
-    piece_start = (np.cumsum(piece_len) - piece_len).astype(np.int32)
-    return vocab_buf, piece_start, piece_len
-
-
-def encode_from_buffer(
-    buf: np.ndarray, msg_start: np.ndarray, msg_end: np.ndarray
-) -> pd.DataFrame:
-    return raw_to_pandas(encode_core(buf, msg_start, msg_end))
+def string_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(data, offsets) of a ``string`` / ``binary`` Arrow array or its
+    ``large_`` twin: int64 offsets rebased to 0 over the array's slice, and
+    data trimmed to the slice's span (a zero-copy view). The one reader of
+    both offset widths, shared by the encode and decode kernels."""
+    if len(arr) == 0:
+        return np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
+    large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    odt = np.int64 if large else np.int32
+    offs = np.frombuffer(arr.buffers()[1], dtype=odt)[
+        arr.offset : arr.offset + len(arr) + 1
+    ].astype(np.int64)
+    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offs[0] : offs[-1]]
+    return data, offs - offs[0]
 
 
 def _token_spans(buf: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -322,6 +255,26 @@ def encode_core(buf: np.ndarray, msg_start: np.ndarray, msg_end: np.ndarray) -> 
     return _raw_columns(n, buf, msg_start, msg_end, vts, vte, codes, values)
 
 
+def encode_spans(data: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> dict:
+    """encode_core over the messages ``data[starts[i] : starts[i] + lens[i]]``.
+
+    Tokens must not span messages, so the spans are gathered — one
+    vectorised gather for the whole batch — into a zeroed buffer with one
+    0x00 separator (a delimiter) between neighbours. The only builder of
+    that layout from string spans; tokens_to_buffer builds it from token
+    ids.
+    """
+    lens = np.asarray(lens, dtype=np.int64)
+    n = lens.size
+    msg_start = np.cumsum(lens + 1) - (lens + 1)
+    buf = np.zeros(int(lens.sum()) + max(n - 1, 0), dtype=np.uint8)
+    r = _ranges(lens)
+    buf[np.repeat(msg_start, lens) + r] = data[
+        np.repeat(np.asarray(starts, dtype=np.int64), lens) + r
+    ]
+    return encode_core(buf, msg_start, msg_start + lens)
+
+
 def _raw_columns(n, buf, msg_start, msg_end, vts, vte, codes, values) -> dict:
     # ---- logtype output construction ----
     # in-var mask via +1/-1 diff trick; var starts/ends are all distinct
@@ -395,24 +348,3 @@ def _raw_columns(n, buf, msg_start, msg_end, vts, vte, codes, values) -> dict:
         "d_inner_offsets": d_inner_offsets,
         "d_offsets": d_offsets,
     }
-
-
-def raw_to_pandas(raw: dict) -> pd.DataFrame:
-    n = raw["n"]
-    lt_bytes = raw["lt_data"].tobytes()
-    lo = raw["lt_offsets"]
-    logtypes = [lt_bytes[lo[i]:lo[i + 1]].decode("utf-8") for i in range(n)]
-    codes_list = raw["codes"].astype(np.int32).tolist()
-    nd_list = raw["nd_values"].tolist()
-    d_bytes = raw["d_data"].tobytes()
-    dio = raw["d_inner_offsets"]
-    d_strs = [d_bytes[dio[i]:dio[i + 1]].decode("utf-8") for i in range(len(dio) - 1)]
-    vo, ndo, do = raw["var_offsets"], raw["nd_offsets"], raw["d_offsets"]
-    return pd.DataFrame(
-        {
-            "logtype": logtypes,
-            "placeholders": [codes_list[vo[i]:vo[i + 1]] for i in range(n)],
-            "encoded_vars": [nd_list[ndo[i]:ndo[i + 1]] for i in range(n)],
-            "dict_vars": [d_strs[do[i]:do[i + 1]] for i in range(n)],
-        }
-    )

@@ -9,43 +9,27 @@ digits, dict id → dictionary string), honoring '\\' escapes.
 
 Spark shape: the *decode join* — events ⋈ logtype_dict (broadcast) for the
 template, dict variables either stored inline (our sinks keep dict_vars
-strings) or joined from var_dict by id. The string assembly is the
-fully-vectorized numpy buffer-splice kernel (decode_kernel_np) — no per-row
-Python; the pandas-UDF wrapper converts its Series to Arrow in C
-(pa.array) and hands zero-copy buffers to the kernel.
+strings) or joined from var_dict by id — is done by each caller (search,
+federation, decompress_file); ``decode_df`` then assembles the strings with
+the fully-vectorized numpy buffer-splice kernel (decode_kernel_np) over
+whole Arrow batches — no per-row Python.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from clp_spark.functions.arrow_kernel import passthrough_schema
 from clp_spark.functions.decode_kernel_np import decode_arrays
-
-
-def make_decode_udf():
-    """(logtype, encoded_vars, dict_vars) -> message, usable as a Column
-    expression. Arrow-batched; the batch is decoded by the numpy kernel."""
-
-    @F.pandas_udf("string")
-    def _decode(logtype: pd.Series, encoded_vars: pd.Series, dict_vars: pd.Series) -> pd.Series:
-        lt = pa.array(logtype, type=pa.string())
-        ev = pa.array(encoded_vars, type=pa.list_(pa.int64()))
-        dv = pa.array(dict_vars, type=pa.list_(pa.string()))
-        out = decode_arrays(lt, ev, dv)
-        return out.to_pandas()
-
-    return _decode
 
 
 def make_decode_arrow(passthrough: list[str], out_col: str = "message"):
     """mapInArrow function: RecordBatch(passthrough + logtype + encoded_vars +
     dict_vars) → RecordBatch(passthrough + message). Zero per-row Python in
-    either direction — the preferred shape when decode is a pipeline stage."""
+    either direction."""
 
     def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -62,36 +46,6 @@ def make_decode_arrow(passthrough: list[str], out_col: str = "message"):
 
 def decode_df(df: DataFrame, passthrough: list[str], out_col: str = "message") -> DataFrame:
     """DataFrame-level decode: passthrough + message via mapInArrow."""
-    types = dict(zip(df.columns, [f.dataType.simpleString() for f in df.schema.fields]))
     df = df.select(*passthrough, "logtype", "encoded_vars", "dict_vars")
-    out_schema = ", ".join(
-        [f"{c} {types[c]}" for c in passthrough] + [f"{out_col} string"]
-    )
+    out_schema = passthrough_schema(df, passthrough, f"{out_col} string")
     return df.mapInArrow(make_decode_arrow(passthrough, out_col), out_schema)
-
-
-def reconstruct_messages(
-    sinks: DataFrame, logtype_dict: DataFrame | None = None
-) -> DataFrame:
-    """Add a ``message`` column reconstructing the original text.
-
-    If the rows carry ``logtype_id`` instead of ``logtype``, pass the
-    dictionary for a broadcast decode join.
-    """
-    df = sinks
-    if "logtype" not in df.columns:
-        if logtype_dict is None:
-            raise ValueError("rows lack a logtype column and no dictionary given")
-        df = df.join(
-            F.broadcast(logtype_dict.select("logtype_id", "logtype")), "logtype_id"
-        )
-    decode = make_decode_udf()
-    return df.withColumn(
-        "message", decode(F.col("logtype"), F.col("encoded_vars"), F.col("dict_vars"))
-    )
-
-
-def reconstruct_in_order(sinks: DataFrame, order_col: str = "log_event_idx") -> DataFrame:
-    """Ordered reconstruction (reference: clp-s delta-encoded log_event_idx,
-    clp_s/archive_constants.hpp:31) — sort by the preserved event index."""
-    return reconstruct_messages(sinks).orderBy(order_col)

@@ -2,8 +2,9 @@
 
 This module is the *test oracle*: a direct, row-at-a-time implementation of the
 reference rules, used only in pytest to validate the vectorized Spark kernels.
-It is intentionally simple and slow — the production path is
-``clp_spark.functions.encode_kernel``.
+It is intentionally simple and slow — the production path is the Arrow
+encoder ``clp_spark.functions.arrow_kernel`` over the numpy kernel
+``clp_spark.functions.encode_kernel_np``.
 
 Semantics reproduced (reference file:line, /root/reference):
 - delimiter set:                components/core/src/clp/ir/parsing.cpp:20-24

@@ -37,8 +37,6 @@ import os
 import re
 import time
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -100,24 +98,6 @@ def glt_route(encoded: DataFrame, out_dir: str, num_buckets: int = 16) -> None:
         .partitionBy("lt_bucket")
         .parquet(out_dir)
     )
-
-
-def make_detok_encode_udf(vocab_text: list[str]):
-    """Fused tokens→encoded-struct UDF: detokenize + CLP-encode in one numpy
-    pass with no intermediate Python strings (encode_kernel_np.detok_encode_batch)."""
-    from clp_spark.functions.encode_kernel import ENCODED_STRUCT
-    from clp_spark.functions.encode_kernel_np import (
-        build_vocab_buffer,
-        detok_encode_batch,
-    )
-
-    vocab_buf, piece_start, piece_len = build_vocab_buffer(vocab_text)
-
-    @F.pandas_udf(ENCODED_STRUCT)
-    def _detok_encode(tokens: pd.Series) -> pd.DataFrame:
-        return detok_encode_batch(tokens, vocab_buf, piece_start, piece_len)
-
-    return _detok_encode
 
 
 def _jvm_tuning(builder):

@@ -188,33 +188,21 @@ def _write_str_packets(buf, pos, lens, data, starts, tags=(STR_U8, STR_U16, STR_
     _write_len_tagged(buf, pos, lens, tags, data, starts)
 
 
-def _clp_str_parts(data: np.ndarray, offsets: np.ndarray, four: bool = False):
-    """encode_core over the given strings → (per-string serialized size,
-    writer(buf, positions)) for clp-string value packets: 0x5A + 8-byte
-    encoded vars, or 0x59 + 4-byte encoded vars with oversize-value
-    demotion when ``four`` (utils.hpp serialize_clp_string, templated over
-    both encodings)."""
-    from clp_spark.functions.encode_kernel_np import DICT_PH, encode_core
+def _clp_str_parts(
+    data: np.ndarray, starts: np.ndarray, lens: np.ndarray, four: bool = False
+):
+    """encode_spans over the strings ``data[starts[i] : starts[i] + lens[i]]``
+    → (per-string serialized size, writer(buf, positions)) for clp-string
+    value packets: 0x5A + 8-byte encoded vars, or 0x59 + 4-byte encoded vars
+    with oversize-value demotion when ``four`` (utils.hpp
+    serialize_clp_string, templated over both encodings)."""
+    from clp_spark.functions.encode_kernel_np import DICT_PH, encode_spans
     from clp_spark.sources.ir_stream import (
         LT_I32, LT_U8, LT_U16, VAR_8BYTE, VAR_STR_I32, VAR_STR_U8, VAR_STR_U16,
         _len_header_sizes, _write_len_tagged,
     )
 
-    n = len(offsets) - 1
-    # encode_core scans token spans over the WHOLE buffer; adjacent strings
-    # with no delimiter between them would fuse tokens across boundaries —
-    # interpose a NUL (a delimiter) between consecutive strings, as the
-    # Arrow kernel's batch layout does
-    lens = np.diff(offsets).astype(np.int64)
-    sep_starts = (offsets[:-1] + np.arange(n, dtype=np.int64)).astype(np.int64)
-    sep_ends = sep_starts + lens
-    buf = np.zeros(int(offsets[-1]) + max(n - 1, 0), dtype=np.uint8)
-    if int(lens.sum()):
-        buf[np.repeat(sep_starts, lens) + _ranges(lens)] = data[
-            np.repeat(offsets[:-1].astype(np.int64), lens) + _ranges(lens)
-        ]
-    data, offsets = buf, None
-    raw = encode_core(data, sep_starts, sep_ends)
+    raw = encode_spans(data, starts, lens)
     codes = np.asarray(raw["codes"])
     var_offsets = np.asarray(raw["var_offsets"], dtype=np.int64)
     nd_values = np.asarray(raw["nd_values"], dtype=np.int64)
@@ -267,7 +255,7 @@ def _clp_str_parts(data: np.ndarray, offsets: np.ndarray, four: bool = False):
             lt_offs[:-1].astype(np.int64),
         )
 
-    assert len(sizes) == n
+    assert len(sizes) == len(lens)
     return sizes, write
 
 
@@ -352,14 +340,9 @@ def serialize_kv_ir_core(
             sizes[li, plain] = _str_hdr_sizes(lens[plain]) + lens[plain]
             if clp.any():
                 idx = np.flatnonzero(clp)
-                lens_c = lens[idx]
-                starts_c = lf.offsets[:-1][idx]
-                sub = np.zeros(int(lens_c.sum()), dtype=np.uint8)
-                if len(sub):
-                    sub[:] = lf.data[np.repeat(starts_c, lens_c) + _ranges(lens_c)]
-                sub_offs = np.concatenate([[0], np.cumsum(lens_c)]).astype(np.int64)
                 csizes, writer = _clp_str_parts(
-                    sub, sub_offs, four=encoding == "four"
+                    lf.data, lf.offsets[:-1][idx], lens[idx],
+                    four=encoding == "four",
                 )
                 sizes[li, idx] = csizes
                 clp_writers.append((li, idx, writer))

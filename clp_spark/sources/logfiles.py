@@ -29,10 +29,12 @@ from clp_spark.operators.dictionary import assign_sorted_ids
 from clp_spark.operators.messages import assemble_multiline
 
 
-# Any URI scheme (file:, hdfs://, s3a://, ...) — raw local paths never
-# match, so scheme presence separates input_file_name() URIs (encoded)
-# from binaryFile-derived paths (raw, scheme-stripped at the readers).
-_URI_SCHEME_RE = "^[A-Za-z][A-Za-z0-9+.-]*:"
+# A URI: the local `file:` scheme (`file:/x`, `file:///x`) or any
+# `scheme://` (hdfs://, s3a://, ...). Raw local paths never match — not
+# even ones that merely contain a colon (`data:1.log`, `C:/x`) — so scheme
+# presence separates input_file_name() URIs (encoded) from
+# binaryFile-derived paths (raw, scheme-stripped at the readers).
+_URI_SCHEME_RE = "^(file:|[A-Za-z][A-Za-z0-9+.-]*://)"
 
 
 def decode_file_uri_expr(col):

@@ -1,15 +1,19 @@
-"""Parity tests: vectorized encode kernel vs the pure-Python oracle."""
+"""Parity tests: the Arrow message encoder (the per-batch body of the
+production ``make_encode_arrow`` / ``encode_df`` path) vs the pure-Python
+oracle, over every Arrow string layout a batch can arrive in."""
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from clp_spark.functions.encode_kernel import encode_batch as encode_batch_regex
-from clp_spark.functions.encode_kernel_np import encode_batch_np
+from clp_spark.functions.arrow_kernel import (
+    encode_arrays,
+    make_detok_encode_arrow,
+    make_encode_arrow,
+)
 from clp_spark.oracle import decode_message, encode_message
-
-encode_batch = encode_batch_regex  # default for module-level helpers
 
 FIXTURE_MESSAGES = [
     "",
@@ -29,33 +33,49 @@ FIXTURE_MESSAGES = [
     "zero-pad 007 -0 0 00.1 +1 +1.0",
     "a=-  b=c d=4 =e =9 f= /slash/path_7/x",
     "up-time=3d mixed-0.5-x",
+    None,
+    "after a null 42",
 ]
 
+# string: a plain StringArray; large_string: 64-bit offsets (Spark's
+# spark.sql.execution.arrow.useLargeVarTypes); sliced: a StringArray with a
+# non-zero offset, as a batch cut from a wider array arrives
+LAYOUTS = ("string", "large_string", "sliced")
 
-KERNELS = {"regex": encode_batch_regex, "numpy": encode_batch_np}
+
+def message_array(messages, layout="string") -> pa.Array:
+    if layout == "sliced":
+        pad = ["pad 1 head", "pad 2 tail"]
+        wide = pa.array(pad + list(messages) + pad, type=pa.string())
+        return wide.slice(len(pad), len(messages))
+    return pa.array(messages, type=getattr(pa, layout)())
 
 
-def assert_batch_matches_oracle(messages, kernel=encode_batch_regex):
-    out = kernel(pd.Series(messages, dtype=object))
+def encode_columns(messages, layout="string") -> dict[str, list]:
+    cols = encode_arrays(message_array(messages, layout))
+    return {name: col.to_pylist() for name, col in cols.items()}
+
+
+def assert_batch_matches_oracle(messages, layout="string"):
+    out = encode_columns(messages, layout)
+    assert all(len(col) == len(messages) for col in out.values())
     for i, msg in enumerate(messages):
+        msg = "" if msg is None else msg  # a null message encodes as ""
         exp = encode_message(msg)
         assert out["logtype"][i] == exp.logtype, f"logtype mismatch for {msg!r}"
-        assert list(out["placeholders"][i]) == exp.placeholders, f"placeholders for {msg!r}"
-        assert [int(x) for x in out["encoded_vars"][i]] == exp.encoded_vars, (
-            f"encoded_vars for {msg!r}"
-        )
-        assert list(out["dict_vars"][i]) == exp.dict_vars, f"dict_vars for {msg!r}"
+        assert out["placeholders"][i] == exp.placeholders, f"placeholders for {msg!r}"
+        assert out["encoded_vars"][i] == exp.encoded_vars, f"encoded_vars for {msg!r}"
+        assert out["dict_vars"][i] == exp.dict_vars, f"dict_vars for {msg!r}"
         # and the batch output round-trips through the oracle decoder
         assert (
-            decode_message(out["logtype"][i], [int(x) for x in out["encoded_vars"][i]],
-                           list(out["dict_vars"][i]))
+            decode_message(out["logtype"][i], out["encoded_vars"][i], out["dict_vars"][i])
             == msg
         )
 
 
-@pytest.mark.parametrize("kernel", list(KERNELS), ids=list(KERNELS))
-def test_fixture_messages(kernel):
-    assert_batch_matches_oracle(FIXTURE_MESSAGES, KERNELS[kernel])
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_fixture_messages(layout):
+    assert_batch_matches_oracle(FIXTURE_MESSAGES, layout)
 
 
 # alphabet biased toward the interesting characters
@@ -65,10 +85,16 @@ _ALPHABET = st.sampled_from(
 
 
 @settings(max_examples=300, deadline=None)
-@given(st.lists(st.text(_ALPHABET, min_size=0, max_size=60), min_size=1, max_size=20))
+@given(
+    st.lists(
+        st.one_of(st.none(), st.text(_ALPHABET, min_size=0, max_size=60)),
+        min_size=1,
+        max_size=20,
+    )
+)
 def test_fuzz_parity(messages):
-    assert_batch_matches_oracle(messages, encode_batch_regex)
-    assert_batch_matches_oracle(messages, encode_batch_np)
+    for layout in LAYOUTS:
+        assert_batch_matches_oracle(messages, layout)
 
 
 @settings(max_examples=100, deadline=None)
@@ -84,5 +110,56 @@ def test_fuzz_parity(messages):
     )
 )
 def test_fuzz_numeric_tokens(tokens):
-    assert_batch_matches_oracle([" ".join(tokens)], encode_batch_regex)
-    assert_batch_matches_oracle([" ".join(tokens)], encode_batch_np)
+    for layout in LAYOUTS:
+        assert_batch_matches_oracle([" ".join(tokens)], layout)
+
+
+@pytest.mark.parametrize("messages", [[""], ["", "", ""], [None], [None, ""], []])
+def test_all_empty_batch(messages):
+    """A batch with no message bytes at all — including the one-row batch,
+    which must encode to the empty logtype, not a separator byte."""
+    for layout in LAYOUTS:
+        assert_batch_matches_oracle(messages, layout)
+
+
+def test_null_slot_covering_bytes_encodes_empty():
+    """Arrow lets a null slot span data bytes; they are not a message."""
+    validity = pa.array([True, False, True]).buffers()[1]
+    arr = pa.StringArray.from_buffers(
+        3, pa.py_buffer(np.array([0, 4, 8, 12], np.int32).tobytes()),
+        pa.py_buffer(b"id 1id 2id 3"), validity,
+    )
+    assert encode_arrays(arr)["logtype"].to_pylist() == ["id \x11", "", "id \x11"]
+
+
+def test_large_string_batch_through_map_fn():
+    """The mapInArrow function reads a large_string message column by its
+    64-bit offsets (reading them as 32-bit silently turns every message
+    into a logtype of separator bytes)."""
+    msgs = ["took 12 ms user=bob", "", "retry 3 of 0.5 s on node-7"]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2, 3], pa.int64()), pa.array(msgs, pa.large_string())],
+        ["id", "message"],
+    )
+    (out,) = make_encode_arrow(["id"])(iter([batch]))
+    assert out.column("id").to_pylist() == [1, 2, 3]
+    for i, msg in enumerate(msgs):
+        exp = encode_message(msg)
+        assert out.column("logtype")[i].as_py() == exp.logtype
+        assert out.column("encoded_vars")[i].as_py() == exp.encoded_vars
+        assert out.column("dict_vars")[i].as_py() == exp.dict_vars
+
+
+def test_detok_empty_token_list():
+    """The token-id path: a one-row batch of an empty token list encodes to
+    the empty logtype."""
+    vocab = ["took", " ", "12"]
+    for token_lists in ([[]], [[], []], [[0, 1, 2], []], [[], [0, 1, 2]]):
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(token_lists, pa.list_(pa.int32()))], ["tokens"]
+        )
+        (out,) = make_detok_encode_arrow(vocab, [])(iter([batch]))
+        msgs = ["".join(vocab[t] for t in toks) for toks in token_lists]
+        assert out.column("logtype").to_pylist() == [
+            encode_message(m).logtype for m in msgs
+        ]

@@ -14,16 +14,15 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from clp_spark.functions.encode_kernel_np import encode_core
+from clp_spark.functions.encode_kernel_np import encode_spans
 from clp_spark.oracle.encoder import encode_message
 from clp_spark.sources import ir_stream as ir
 
 
 def _encode(msgs: list[bytes]):
-    buf = np.frombuffer(b"\x00".join(msgs), dtype=np.uint8)
     lens = np.array([len(m) for m in msgs], dtype=np.int64)
-    starts = np.cumsum(np.concatenate([[0], lens[:-1] + 1])).astype(np.int64)
-    return encode_core(buf, starts, starts + lens)
+    data = np.frombuffer(b"".join(msgs), dtype=np.uint8)
+    return encode_spans(data, np.cumsum(lens) - lens, lens)
 
 
 def _serialize(msgs, ts=None):

@@ -2,14 +2,14 @@
 
 from datetime import datetime, timezone
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from clp_spark.functions.encode_kernel import encode_batch
-from clp_spark.operators.decode import reconstruct_messages
+from clp_spark.functions.arrow_kernel import encode_df
+from clp_spark.operators.decode import decode_df
 from clp_spark.operators.indexer import table_column_stats
 from clp_spark.operators.messages import assemble_multiline
+from tests.test_encode_kernel import encode_columns
 
 
 def ms(s: str) -> int:
@@ -155,33 +155,34 @@ class TestMultiline:
 
 class TestDecodeJoin:
     def test_reconstruct_roundtrip(self, spark):
+        """Rows carrying the logtype inline decode with no join."""
         msgs = [
             "Task 17 failed on node-3 at 0.335 s",
             "plain text only",
             "hex deadBEEF and big 10000000000000000000",
         ]
-        enc = encode_batch(pd.Series(msgs, dtype=object))
+        enc = encode_columns(msgs)
         rows = [
-            (str(i), enc["logtype"][i], list(enc["encoded_vars"][i]),
-             list(enc["dict_vars"][i]))
+            (str(i), enc["logtype"][i], enc["encoded_vars"][i], enc["dict_vars"][i])
             for i in range(len(msgs))
         ]
         df = spark.createDataFrame(
             rows, "doc_id string, logtype string, encoded_vars array<long>, "
                   "dict_vars array<string>"
         )
-        got = {r["doc_id"]: r["message"] for r in reconstruct_messages(df).collect()}
+        got = {r["doc_id"]: r["message"] for r in decode_df(df, ["doc_id"]).collect()}
         for i, m in enumerate(msgs):
             assert got[str(i)] == m
 
     def test_reconstruct_via_dict_join(self, spark):
+        """Rows carrying logtype_id: broadcast logtype join, then decode."""
         msgs = ["a 1", "a 2", "b 9"]
-        enc = encode_batch(pd.Series(msgs, dtype=object))
+        enc = encode_columns(msgs)
         lts = sorted(set(enc["logtype"]))
         lt_id = {lt: i for i, lt in enumerate(lts)}
         rows = [
-            (str(i), lt_id[enc["logtype"][i]], list(enc["encoded_vars"][i]),
-             list(enc["dict_vars"][i]))
+            (str(i), lt_id[enc["logtype"][i]], enc["encoded_vars"][i],
+             enc["dict_vars"][i])
             for i in range(len(msgs))
         ]
         df = spark.createDataFrame(
@@ -189,9 +190,26 @@ class TestDecodeJoin:
                   "dict_vars array<string>"
         )
         ltd = spark.createDataFrame(list(lt_id.items()), "logtype string, logtype_id long")
+        joined = df.join(F.broadcast(ltd), "logtype_id")
         got = {r["doc_id"]: r["message"]
-               for r in reconstruct_messages(df, ltd).collect()}
+               for r in decode_df(joined, ["doc_id"]).collect()}
         assert got == {str(i): m for i, m in enumerate(msgs)}
+
+    def test_large_var_types_roundtrip(self, spark):
+        """With Arrow large_string transfer (64-bit offsets) enabled, encode
+        then decode returns every message unchanged and in its own row."""
+        msgs = ["took 12 ms user=bob", "", "plain text", "hex deadbeef 0.5 s"]
+        df = spark.createDataFrame(
+            list(enumerate(msgs)), "id long, message string"
+        ).repartition(2)
+        key = "spark.sql.execution.arrow.useLargeVarTypes"
+        spark.conf.set(key, "true")
+        try:
+            got = {r["id"]: r["message"]
+                   for r in decode_df(encode_df(df, ["id"]), ["id"]).collect()}
+        finally:
+            spark.conf.unset(key)
+        assert got == dict(enumerate(msgs))
 
 
 class TestIndexer:

@@ -24,6 +24,8 @@ class TestDecodeHelper:
                 ("/tmp/raw+path %file.log",),       # binaryFile raw form
                 ("file:/tmp/x%2By.log",),           # single-slash variant
                 ("hdfs://nn:9000/logs/app%202024.jsonl",),  # remote URI
+                ("data:1%20x.log",),  # raw name with a colon, not a URI
+                ("C:/logs/a%2Bb.log",),  # drive-letter path, not a URI
             ],
             "p string",
         )
@@ -35,6 +37,9 @@ class TestDecodeHelper:
             "/tmp/x+y.log",             # %2B decodes to '+'
             # remote schemes decode but keep the scheme
             "hdfs://nn:9000/logs/app 2024.jsonl",
+            # a colon without '//' is no scheme: raw, untouched
+            "data:1%20x.log",
+            "C:/logs/a%2Bb.log",
         ]
 
     def test_python_twin_and_scheme_strip(self):
@@ -47,6 +52,9 @@ class TestDecodeHelper:
         assert decode_file_uri("/raw %path+1.log") == "/raw %path+1.log"
         assert (decode_file_uri("hdfs://h/x%25y.log")
                 == "hdfs://h/x%y.log")
+        assert decode_file_uri("data:1%20x.log") == "data:1%20x.log"
+        assert decode_file_uri("C:/a%2Bb.log") == "C:/a%2Bb.log"
+        assert decode_file_uri("file:/a%2Bb.log") == "/a+b.log"
         assert strip_file_scheme("file:/tmp/x") == "/tmp/x"
         assert strip_file_scheme("file:///tmp/x") == "/tmp/x"
         assert strip_file_scheme("hdfs://h/x") == "hdfs://h/x"

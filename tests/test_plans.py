@@ -28,10 +28,9 @@ class TestPlanShapes:
         assert "BroadcastHashJoin" in plan_of(joined)
 
     def test_logtype_enrich_broadcast(self, spark):
-        from clp_spark.functions.encode_kernel import encode_batch
-        import pandas as pd
+        from tests.test_encode_kernel import encode_columns
 
-        enc = encode_batch(pd.Series(["a 1", "b 2"], dtype=object))
+        enc = encode_columns(["a 1", "b 2"])
         sinks = spark.createDataFrame(
             [(enc["logtype"][i],) for i in range(2)], "logtype string"
         )

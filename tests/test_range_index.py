@@ -212,6 +212,17 @@ class TestMultiArchiveSplits:
         aids = {r["archive_id"] for r in res.collect()}
         assert len(aids) == 1
 
+    def test_federated_meta_search_every_split(self, spark, split_archives):
+        """big.jsonl sits at a different log_event_idx range in each archive
+        it split into: every archive scans with its own range-index
+        rewrite, so the rows of every split come back."""
+        res = search_json_archives(
+            spark, split_archives, '$_filename: "*big.jsonl" AND i: *'
+        )
+        assert sorted(json.loads(r["json"])["i"] for r in res.collect()) == list(
+            range(20)
+        )
+
     def test_federated_no_match_prunes_all(self, spark, split_archives):
         res = search_json_archives(
             spark, split_archives, '$_filename: "absent" AND i: *'

@@ -6,7 +6,6 @@ Modeled on the reference's golden query corpus approach
 
 import re
 
-import pandas as pd
 import pytest
 from pyspark.sql.types import (
     ArrayType,
@@ -17,8 +16,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from clp_spark.functions.encode_kernel import encode_batch
 from clp_spark.operators.search import MATCH_ALL, compile_query, search_archive
+from tests.test_encode_kernel import encode_columns
 
 CORPUS = [
     "here is a string with a small int 4938 and a very large int 10000000000000000000",
@@ -63,7 +62,7 @@ def naive_wildcard_match(msg: str, query: str, ignore_case: bool = False) -> boo
 
 @pytest.fixture(scope="module")
 def archive(spark):
-    enc = encode_batch(pd.Series(CORPUS, dtype=object))
+    enc = encode_columns(CORPUS)
     logtypes = sorted(set(enc["logtype"]))
     lt_id = {lt: i for i, lt in enumerate(logtypes)}
     var_values = sorted({v for dv in enc["dict_vars"] for v in dv})

@@ -15,7 +15,7 @@ import os
 import numpy as np
 import pytest
 
-from clp_spark.functions.encode_kernel_np import encode_core
+from clp_spark.functions.encode_kernel_np import encode_spans
 from clp_spark.sources import ir_stream as ir
 from clp_spark.sources.ir_four import (
     event_ir_sizes4,
@@ -38,10 +38,9 @@ TS = np.cumsum(
 
 
 def _cols(msgs):
-    buf = np.frombuffer(b"\x00".join(msgs), dtype=np.uint8)
     lens = np.array([len(m) for m in msgs], dtype=np.int64)
-    starts = np.cumsum(np.concatenate([[0], lens[:-1] + 1])).astype(np.int64)
-    raw = encode_core(buf, starts, starts + lens)
+    data = np.frombuffer(b"".join(msgs), dtype=np.uint8)
+    raw = encode_spans(data, np.cumsum(lens) - lens, lens)
     return (
         raw["lt_data"],
         np.asarray(raw["lt_offsets"], dtype=np.int64),
